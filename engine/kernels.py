@@ -116,19 +116,26 @@ def sliding_sum_chords(
     Exact (no FFT): per-row prefix sums + vertical shifted adds.
     """
     H, W = plane.shape
-    # prefix sums along x with a leading zero column
-    cs = np.zeros((H, W + 1), dtype=np.float64)
-    np.cumsum(plane, axis=1, out=cs[:, 1:])
     out = np.zeros((H, W), dtype=np.float64)
-    xs = np.arange(W)
+    if not chords:
+        return out
+    # per-row prefix sums, padded so every chord end is in range:
+    # cp[:, L + k] = Σ plane[:, :clip(k, 0, W)] — L zero columns on the
+    # left, R copies of the row total on the right, so each chord is
+    # two contiguous slices.
+    L = max(0, -min(lo for _, lo, _ in chords))
+    R = max(0, max(hi for _, _, hi in chords) + 1)
+    cp = np.zeros((H, L + W + 1 + R), dtype=np.float64)
+    np.cumsum(plane, axis=1, out=cp[:, L + 1 : L + W + 1])
+    cp[:, L + W + 1 :] = cp[:, L + W : L + W + 1]
     for dy, lo, hi in chords:
         y0, y1 = max(0, -dy), min(H, H - dy)  # output rows with valid source
         if y0 >= y1:
             continue
-        src = cs[y0 + dy : y1 + dy]
-        a = np.clip(xs + lo, 0, W)
-        b = np.clip(xs + hi + 1, 0, W)
-        out[y0:y1] += src[:, b] - src[:, a]
+        src = cp[y0 + dy : y1 + dy]
+        b = L + hi + 1
+        a = L + lo
+        out[y0:y1] += src[:, b : b + W] - src[:, a : a + W]
     return out
 
 

@@ -8,6 +8,14 @@ import os
 from pyspark.sql import SparkSession
 
 
+def _default_heap() -> str:
+    """A third of the host's RAM, at most 48g. ParallelGC grows the heap
+    toward -Xmx rather than collect, so a 48g ceiling on a 15 GB host
+    lets one long session's JVM reach 14 GB RSS and be OOM-killed."""
+    ram = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES")
+    return f"{min(48, max(1, ram // 3 // 2**30))}g"
+
+
 def get_spark(
     app_name: str = "moving_window_spark",
     cores: int | None = None,
@@ -41,7 +49,7 @@ def get_spark(
         # old gen degrade job throughput 3-5x run-over-run (see
         # engine/bench_jobs.force_gc); also drives shuffle-file cleanup
         .config("spark.cleaner.periodicGC.interval", "5min")
-        .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEM", "48g"))
+        .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEM", _default_heap()))
         .config("spark.ui.enabled", "false")
         # ParallelGC for batch throughput: G1's humongous-allocation
         # concurrent cycles (tile payloads + Arrow batches >= half a

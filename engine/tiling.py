@@ -45,7 +45,7 @@ incremental accumulator slide (SURVEY.md §3.1); same pinned results
 from __future__ import annotations
 
 from collections.abc import Iterator
-from functools import partial
+from functools import lru_cache, partial
 
 import numpy as np
 import pandas as pd
@@ -57,11 +57,6 @@ from engine import kernels
 TILES_SCHEMA = (
     "tile_x int, tile_y int, level int, band string, "
     "nrows int, ncols int, data array<double>"
-)
-
-_HALO_SCHEMA = (
-    "dst_tx int, dst_ty int, band string, is_center boolean, "
-    "oy int, ox int, nrows int, ncols int, data array<double>"
 )
 
 # stat name -> kernel(arr, r, shape) (single class-free plane stats)
@@ -224,7 +219,7 @@ def rasterize(
             "tile_x int, tile_y int, idx binary, cnt binary, val binary",
         )
 
-        def merge_packed(key, pdf: pd.DataFrame) -> pd.DataFrame:
+        def merge_packed(key: tuple, pdf: pd.DataFrame) -> pd.DataFrame:
             cnt = np.zeros(T * T)
             val = np.zeros(T * T)
             for row in pdf.itertuples(index=False):
@@ -289,7 +284,7 @@ def rasterize(
             "_salt", (F.abs(F.xxhash64("ti", "tj")) % F.lit(S)).cast("int")
         )
 
-        def partial_grid(key, pdf: pd.DataFrame) -> pd.DataFrame:
+        def partial_grid(key: tuple, pdf: pd.DataFrame) -> pd.DataFrame:
             tx, ty = int(key[0]), int(key[1])
             cnt = np.zeros(T * T)
             val = np.zeros(T * T)
@@ -305,7 +300,7 @@ def rasterize(
             partial_grid, "tile_x int, tile_y int, cnt array<double>, val array<double>"
         )
 
-        def merge(key, pdf: pd.DataFrame) -> pd.DataFrame:
+        def merge(key: tuple, pdf: pd.DataFrame) -> pd.DataFrame:
             tx, ty = int(key[0]), int(key[1])
             cnt = np.sum(np.stack(pdf["cnt"].to_numpy()), axis=0)
             val = np.sum(np.stack(pdf["val"].to_numpy()), axis=0)
@@ -341,112 +336,63 @@ def rasterize(
 # J4: halo exchange (strip-sliced neighbor-ring shuffle)
 # ---------------------------------------------------------------------------
 
-def _emit_halo(
-    T: int, g: int, wrap_nx: int | None, it: Iterator[pd.DataFrame]
-) -> Iterator[pd.DataFrame]:
-    """Per source tile: emit the center payload + 8 boundary strips
-    addressed to the neighbors that need them (narrow op, pre-shuffle)."""
-    for pdf in it:
-        out: list[dict] = []
-        for row in pdf.itertuples(index=False):
-            arr = np.asarray(row.data, dtype=np.float64).reshape(row.nrows, row.ncols)
-            sx, sy = int(row.tile_x), int(row.tile_y)
-            for dy in (-1, 0, 1):
-                y0 = max(0, dy * T - g)
-                y1 = min(row.nrows, dy * T + T + g)
-                if y0 >= y1:
-                    continue
-                for dx in (-1, 0, 1):
-                    x0 = max(0, dx * T - g)
-                    x1 = min(row.ncols, dx * T + T + g)
-                    if x0 >= x1:
-                        continue
-                    dst_x = sx + dx
-                    if wrap_nx is not None:
-                        dst_x %= wrap_nx
-                    elif dst_x < 0:
-                        continue
-                    dst_y = sy + dy
-                    if dst_y < 0:
-                        continue
-                    is_center = dx == 0 and dy == 0
-                    sub = arr[y0:y1, x0:x1]
-                    out.append(
-                        {
-                            "dst_tx": dst_x,
-                            "dst_ty": dst_y,
-                            "band": row.band,
-                            "is_center": is_center,
-                            "oy": y0 - dy * T + g,
-                            "ox": x0 - dx * T + g,
-                            "nrows": sub.shape[0],
-                            "ncols": sub.shape[1],
-                            "data": sub.ravel(),
-                        }
-                    )
-        yield pd.DataFrame(
-            out,
-            columns=[
-                "dst_tx", "dst_ty", "band", "is_center",
-                "oy", "ox", "nrows", "ncols", "data",
-            ],
-        )
-
-
-def _halo_branch(T: int, g: int, dy: int, dx: int, wrap_nx: int | None):
-    """One of the 9 emit branches as a pure-JVM struct expression.
+@lru_cache(maxsize=64)
+def _halo_emit_sql(T: int, g: int, wrap_nx: int | None) -> str:
+    """The whole emit as ONE SQL expression: each tile row explodes into
+    its center payload + the 8 boundary strips its neighbors need, as 9
+    ``CASE WHEN valid THEN named_struct(...) END`` branches (NULL for a
+    strip that is empty or addressed off the raster).
 
     Strip extraction is slice arithmetic on the row-major payload:
     full-width strips are ONE contiguous slice; partial-width strips are
     per-row slices flattened — all inside whole-stage codegen, so the
-    emit stage never crosses into Python (the measured Python-crossing
-    cost was ~70% of the focal leg's wall time at local[8]; the python
-    emitter survives as impl="python" for the equality test).
+    emit stage never crosses into Python. Built as a string and parsed
+    by one ``F.expr``: composing the same tree from ``F.*`` calls costs
+    hundreds of py4j round trips per plan. The string (not a JVM
+    Column, which dies with its gateway) is what gets cached.
     """
-    nr, nc = F.col("nrows"), F.col("ncols")
-    y0, x0 = max(0, dy * T - g), max(0, dx * T - g)
-    y1 = F.least(nr, F.lit(dy * T + T + g))
-    x1 = F.least(nc, F.lit(dx * T + T + g))
-    h, w = y1 - F.lit(y0), x1 - F.lit(x0)
-
-    per_row = F.flatten(
-        F.transform(
-            F.sequence(F.lit(y0), y1 - 1),
-            lambda y: F.slice("data", y * nc + F.lit(x0) + 1, w),
-        )
-    )
-    if dx == 0:
-        # full-width strips are ONE contiguous slice — but only when the
-        # computed strip really spans the payload width (w == ncols; a
-        # ragged tile with ncols > T+g would otherwise emit full rows
-        # while declaring ncols=w)
-        data = F.when(w == nc, F.slice("data", F.lit(y0) * nc + 1, h * nc)).otherwise(per_row)
-    else:
-        data = per_row
-
-    dst_x = F.col("tile_x") + F.lit(dx)
-    if wrap_nx is not None:
-        dst_x = ((dst_x % wrap_nx) + wrap_nx) % wrap_nx
-    dst_y = F.col("tile_y") + F.lit(dy)
-
-    valid = (h > 0) & (w > 0) & (dst_y >= 0)
-    if wrap_nx is None:
-        valid = valid & (dst_x >= 0)
-
-    return F.when(
-        valid,
-        F.struct(
-            dst_x.cast("int").alias("dst_tx"),
-            dst_y.cast("int").alias("dst_ty"),
-            F.col("band").alias("band"),
-            F.lit(dy == 0 and dx == 0).alias("is_center"),
-            (F.lit(y0 - dy * T + g)).cast("int").alias("oy"),
-            (F.lit(x0 - dx * T + g)).cast("int").alias("ox"),
-            h.cast("int").alias("nrows"),
-            w.cast("int").alias("ncols"),
-            data.alias("data"),
-        ),
-    )
+    branches = []
+    for dy in (-1, 0, 1):
+        for dx in (-1, 0, 1):
+            y0, x0 = max(0, dy * T - g), max(0, dx * T - g)
+            y1 = f"least(nrows, {dy * T + T + g})"
+            x1 = f"least(ncols, {dx * T + T + g})"
+            h, w = f"({y1} - {y0})", f"({x1} - {x0})"
+            data = (
+                f"flatten(transform(sequence({y0}, {y1} - 1),"
+                f" y -> slice(data, y * ncols + {x0 + 1}, {w})))"
+            )
+            if dx == 0:
+                # full-width strips are ONE contiguous slice — but only
+                # when the strip really spans the payload width (a
+                # ragged tile with ncols > T+g would otherwise emit full
+                # rows while declaring ncols=w)
+                data = (
+                    f"CASE WHEN {w} = ncols"
+                    f" THEN slice(data, {y0} * ncols + 1, {h} * ncols)"
+                    f" ELSE {data} END"
+                )
+            dst_x = f"(tile_x + {dx})"
+            if wrap_nx is not None:
+                dst_x = f"pmod({dst_x}, {wrap_nx})"
+            dst_y = f"(tile_y + {dy})"
+            valid = f"{h} > 0 AND {w} > 0 AND {dst_y} >= 0"
+            if wrap_nx is None:
+                valid += f" AND {dst_x} >= 0"
+            center = "true" if dy == 0 and dx == 0 else "false"
+            branches.append(
+                f"CASE WHEN {valid} THEN named_struct("
+                f"'dst_tx', CAST({dst_x} AS INT),"
+                f" 'dst_ty', CAST({dst_y} AS INT),"
+                f" 'band', band,"
+                f" 'is_center', {center},"
+                f" 'oy', {y0 - dy * T + g},"
+                f" 'ox', {x0 - dx * T + g},"
+                f" 'nrows', CAST({h} AS INT),"
+                f" 'ncols', CAST({w} AS INT),"
+                f" 'data', {data}) END"
+            )
+    return f"explode(array({', '.join(branches)})) AS s"
 
 
 def halo_exchange(
@@ -454,23 +400,14 @@ def halo_exchange(
     T: int,
     g: int,
     wrap_nx: int | None = None,
-    impl: str = "jvm",
 ) -> DataFrame:
     """Shuffle each tile's payload + neighbor strips to the receiving
     tile key. Downstream: groupBy(dst) + assemble (see apply_focal).
 
-    impl="jvm" (default): strip slicing via codegen'd array expressions —
-    zero Python crossings before the shuffle. impl="python": the
-    mapInPandas emitter (kept for the cross-impl equality test)."""
-    if impl == "python":
-        return tiles.mapInPandas(partial(_emit_halo, T, g, wrap_nx), _HALO_SCHEMA)
-    branches = [
-        _halo_branch(T, g, dy, dx, wrap_nx)
-        for dy in (-1, 0, 1)
-        for dx in (-1, 0, 1)
-    ]
+    The emit is a pure-JVM projection (see ``_halo_emit_sql``): zero
+    Python crossings before the shuffle."""
     return (
-        tiles.select(F.explode(F.array(*branches)).alias("s"))
+        tiles.select(F.expr(_halo_emit_sql(T, g, wrap_nx)))
         .where(F.col("s").isNotNull())
         .select("s.*")
     )
@@ -557,7 +494,7 @@ def apply_focal(
 
     exchanged = halo_exchange(tiles, T, g, wrap_nx)
 
-    def run(key, pdf: pd.DataFrame) -> pd.DataFrame:
+    def run(key: tuple, pdf: pd.DataFrame) -> pd.DataFrame:
         got = assemble_padded(pdf, T, g)
         if got is None:
             return pd.DataFrame(
@@ -604,7 +541,7 @@ def apply_focal_bands(
         raise ValueError("halo must cover the kernel radius")
     exchanged = halo_exchange(tiles, T, g, wrap_nx)
 
-    def run(key, pdf: pd.DataFrame) -> pd.DataFrame:
+    def run(key: tuple, pdf: pd.DataFrame) -> pd.DataFrame:
         got = assemble_padded(pdf, T, g)
         if got is None:
             return pd.DataFrame(
@@ -640,9 +577,3 @@ def apply_focal_bands(
 
     return exchanged.groupBy("dst_tx", "dst_ty").applyInPandas(run, TILES_SCHEMA)
 
-
-def focal_pipeline_plan_summary(df: DataFrame) -> str:
-    """Formatted physical plan (for .explain-driven tuning in tests)."""
-    return df._jdf.queryExecution().explainString(  # noqa: SLF001
-        df._sc._jvm.org.apache.spark.sql.execution.ExplainMode.fromString("formatted")
-    )

@@ -257,6 +257,32 @@ def test_integer_exactness():
     assert (s == np.rint(s)).all()
 
 
+def brute_chord_sum(plane, chords):
+    H, W = plane.shape
+    out = np.zeros((H, W))
+    for y in range(H):
+        for x in range(W):
+            for dy, lo, hi in chords:
+                for dx in range(lo, hi + 1):
+                    if 0 <= y + dy < H and 0 <= x + dx < W:
+                        out[y, x] += plane[y + dy, x + dx]
+    return out
+
+
+@pytest.mark.parametrize("hw", [(3, 2), (2, 17), (20, 23)])
+@pytest.mark.parametrize("element", ["cell", "hedge", "vedge"])
+@pytest.mark.parametrize("shape", ["square", "circle"])
+def test_sliding_sum_chords_narrow_arrays(hw, element, shape):
+    """Padded prefix-sum slicing vs explicit chord enumeration on arrays
+    narrower or shorter than the window: every chord end past either
+    array edge must clamp, exactly (integer-valued planes)."""
+    plane = np.random.default_rng(7).integers(-9, 10, size=hw).astype(np.float64)
+    for r in (0, 1, 2, 7):
+        chords = kernels.chords_for(shape, r, element)
+        got = kernels.sliding_sum_chords(plane, chords)
+        np.testing.assert_array_equal(got, brute_chord_sum(plane, chords))
+
+
 def test_focal_annulus_mean_brute():
     """Ring mean r_in < d <= r vs explicit enumeration, NaN speckle and
     borders included; empty rings (all-invalid) -> NaN."""

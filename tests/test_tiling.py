@@ -129,10 +129,36 @@ def test_halo_wrap_lon_seam(spark):
     assert not np.allclose(np.nan_to_num(plain[:, 0]), np.nan_to_num(got[:, 0]))
 
 
+def numpy_halo_rows(tiles_pdf, T, g, wrap_nx):
+    """Reference halo emit: slice every tile's center payload and the
+    g-deep strips its 8 neighbors need straight out of the NumPy array."""
+    out = []
+    for row in tiles_pdf.itertuples(index=False):
+        arr = np.asarray(row.data, dtype=np.float64).reshape(row.nrows, row.ncols)
+        for dy in (-1, 0, 1):
+            y0, y1 = max(0, dy * T - g), min(row.nrows, dy * T + T + g)
+            for dx in (-1, 0, 1):
+                x0, x1 = max(0, dx * T - g), min(row.ncols, dx * T + T + g)
+                dst_x, dst_y = row.tile_x + dx, row.tile_y + dy
+                if wrap_nx is not None:
+                    dst_x %= wrap_nx
+                if y0 >= y1 or x0 >= x1 or dst_x < 0 or dst_y < 0:
+                    continue
+                sub = arr[y0:y1, x0:x1]
+                out.append(
+                    {"dst_tx": dst_x, "dst_ty": dst_y, "band": row.band,
+                     "is_center": dx == 0 and dy == 0,
+                     "oy": y0 - dy * T + g, "ox": x0 - dx * T + g,
+                     "nrows": sub.shape[0], "ncols": sub.shape[1],
+                     "data": sub.ravel()}
+                )
+    return pd.DataFrame(out)
+
+
 @pytest.mark.parametrize("wrap_nx", [None, 4])
 def test_halo_jvm_matches_python(spark, wrap_nx):
     """The codegen'd (slice/transform) halo emitter is row-for-row,
-    byte-for-byte equal to the mapInPandas emitter — including ragged
+    byte-for-byte equal to a NumPy slicing reference — including ragged
     bottom-edge tiles (nrows < T) and lon wrap."""
     T, g = 16, 5
     rng = np.random.default_rng(1)
@@ -141,7 +167,7 @@ def test_halo_jvm_matches_python(spark, wrap_nx):
         for tx in range(4):
             nr = T if ty < 2 else 11
             # one oversized-payload tile (ncols > T+g) exercises the
-            # w != ncols guard in the JVM dx==0 branch
+            # w != ncols guard in the dx==0 branch
             nc = T + g + 3 if (tx, ty) == (1, 1) else T
             arr = rng.random(nr * nc)
             arr[rng.random(nr * nc) < 0.1] = np.nan
@@ -149,22 +175,21 @@ def test_halo_jvm_matches_python(spark, wrap_nx):
                 {"tile_x": tx, "tile_y": ty, "level": 8, "band": "b",
                  "nrows": nr, "ncols": nc, "data": arr}
             )
-    tiles = spark.createDataFrame(pd.DataFrame(rows), schema=tiling.TILES_SCHEMA)
+    tiles_pdf = pd.DataFrame(rows)
+    tiles = spark.createDataFrame(tiles_pdf, schema=tiling.TILES_SCHEMA)
     key = ["dst_tx", "dst_ty", "band", "is_center", "oy", "ox"]
-    a = (
-        tiling.halo_exchange(tiles, T, g, wrap_nx=wrap_nx, impl="jvm")
-        .toPandas().sort_values(key).reset_index(drop=True)
-    )
-    b = (
-        tiling.halo_exchange(tiles, T, g, wrap_nx=wrap_nx, impl="python")
-        .toPandas().sort_values(key).reset_index(drop=True)
-    )
+    exchanged = tiling.halo_exchange(tiles, T, g, wrap_nx=wrap_nx)
+    assert exchanged.dtypes == [
+        ("dst_tx", "int"), ("dst_ty", "int"), ("band", "string"),
+        ("is_center", "boolean"), ("oy", "int"), ("ox", "int"),
+        ("nrows", "int"), ("ncols", "int"), ("data", "array<double>"),
+    ]
+    a = exchanged.toPandas().sort_values(key).reset_index(drop=True)
+    b = numpy_halo_rows(tiles_pdf, T, g, wrap_nx).sort_values(key).reset_index(drop=True)
     assert len(a) == len(b)
     assert (a[key + ["nrows", "ncols"]].values == b[key + ["nrows", "ncols"]].values).all()
     for x, y in zip(a["data"], b["data"]):
-        np.testing.assert_array_equal(
-            np.asarray(x, dtype=float), np.asarray(y, dtype=float)
-        )
+        assert np.asarray(x, dtype=np.float64).tobytes() == y.tobytes()
 
 
 def brute_rasterize_count(pdf, level, T):
